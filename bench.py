@@ -173,54 +173,19 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
-    # Fresh published-artifact store per bench run: the dedup_minhash
-    # composition family reads the verified pair set through a
-    # publish/read seam (dedup_ops.verified_pair_store) — production
-    # materializes that table once per curation run, so the bench lets
-    # the FIRST materialization happen inside this run (warmup of the
-    # first consumer) and charges each composer its marginal read-side
-    # work. A lingering store from a previous run would hide the build
-    # cost entirely; an isolated temp dir keeps the accounting honest.
+    # Fresh published-artifact stores per bench run: composition
+    # queries read shared intermediates (the verified pair set, media
+    # and embedding indexes, derived token tables) through
+    # storeutil.artifact, so the FIRST consumer's untimed warmup pays
+    # each build and every timed run reads parquet. A lingering store
+    # from a previous run would hide the build cost entirely; an
+    # isolated temp dir per store keeps the accounting honest.
     import tempfile
 
-    from programmers_data_spark.queries.dedup_ops import PAIR_STORE_ENV
-    from programmers_data_spark.queries.interchange_ops import (
-        JSONL_STORE_ENV,
-    )
+    from programmers_data_spark.storeutil import STORE_ENVS
 
-    from programmers_data_spark.queries.round12_ops import IMG_STORE_ENV
-
-    os.environ[PAIR_STORE_ENV] = tempfile.mkdtemp(prefix="pds_bench_pairs_")
-    # same per-run isolation for the JSONL roundtrip's written shard
-    # trees (each timed run re-writes — the query IS the roundtrip)
-    os.environ[JSONL_STORE_ENV] = tempfile.mkdtemp(prefix="pds_bench_jsonl_")
-    # and for the published media-hash indexes the incremental
-    # maintenance queries probe (media_index.hash_store/band_store
-    # per modality)
-    from programmers_data_spark.queries.media_lifecycle_ops import (
-        AUDIO_SPEC,
-        VIDEO_SPEC,
-    )
-
-    os.environ[IMG_STORE_ENV] = tempfile.mkdtemp(prefix="pds_bench_img_")
-    os.environ[AUDIO_SPEC.store_env] = tempfile.mkdtemp(
-        prefix="pds_bench_aud_"
-    )
-    os.environ[VIDEO_SPEC.store_env] = tempfile.mkdtemp(
-        prefix="pds_bench_vid_"
-    )
-    # and for the published embedding signature/pair/cluster stores
-    # the round-16 vector-maintenance queries probe
-    from programmers_data_spark.embedding_index import EMB_STORE_ENV
-
-    os.environ[EMB_STORE_ENV] = tempfile.mkdtemp(prefix="pds_bench_emb_")
-    # and for the published derived-table stores (tokens/postings/
-    # shingles/bigram vocab/activity months — r18, the pair-store
-    # accounting: fresh per run, so the first consumer's untimed
-    # warmup pays each build and every timed run reads parquet)
-    from programmers_data_spark.derived_store import DERIV_STORE_ENV
-
-    os.environ[DERIV_STORE_ENV] = tempfile.mkdtemp(prefix="pds_bench_der_")
+    for env in STORE_ENVS:
+        os.environ[env] = tempfile.mkdtemp(prefix="pds_bench_store_")
     spark = get_spark(app_name="pds-bench")
 
     registry.load_all()

@@ -15,11 +15,9 @@ with the four hash families (text MinHash, image/audio/video dHash):
   (``vec_id % 10 != EMB_ARRIVAL_RESIDUE``), the state incremental
   cluster maintenance merges into.
 
-All three are content-addressed to the embeddings fixture bytes plus
-the LIVE algorithm constants (plane salt/tables/bits, fixed-point
-scale, threshold — never hand-written literals, the pair-store r8
-lesson), so a constant bump re-keys the store instead of serving
-stale bits.
+All three are ``storeutil.artifact`` stores over the embeddings
+fixture, addressed with the LIVE algorithm constants (plane
+salt/tables/bits, fixed-point scale, threshold).
 
 Scale posture: at 100 TB the signature table is the published ANN
 index a day's crawl probes; nothing here is all-pairs (candidates
@@ -34,7 +32,6 @@ vector pipeline; this tier is north-star training-data-pipeline scope
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -49,18 +46,7 @@ EMB_STORE_ENV = "SPARK_GRAFT_EMB_STORE"
 # slices and the text tier's doc_id % 10 == 7 batch.
 EMB_ARRIVAL_RESIDUE = 4
 
-# streaming-ingest scratch knobs (the replay engine's convention)
-EMB_INGEST_ENV = "SPARK_GRAFT_EMB_INGEST_STORE"
-
 _N_SIG_BUCKETS = 8
-
-# memoized store handles — *_CACHE contract (bench._reset's package
-# sweep reaches these by name); keyed like media_index._memo_key so a
-# mid-session store-env change misses the cache naturally
-_MemoKey = tuple[str, str, str]
-_SIG_STORE_CACHE: dict[_MemoKey, DataFrame] = {}
-_EMB_PAIR_STORE_CACHE: dict[_MemoKey, DataFrame] = {}
-_EMB_CLUSTER_STORE_CACHE: dict[_MemoKey, DataFrame] = {}
 
 
 def _algo_fp() -> str:
@@ -73,37 +59,24 @@ def _algo_fp() -> str:
         NEARDUP_THRESHOLD,
     )
 
-    # v2: the pair store carries cos_bp (exact basis points of the
-    # fold cosine) so threshold sweeps are pure store reads — the
-    # ham_d / jaccard pattern of the other four families' stores
     return (
         f"hplsh|{_ND_SALT}|{_ND_TABLES}x{_ND_BITS}|q{_SIG_SCALE}"
-        f"|t{NEARDUP_THRESHOLD}|v2"
+        f"|t{NEARDUP_THRESHOLD}"
     )
 
 
-def store_table_dir(sf_dir: str, leaf: str) -> str:
-    """Content-addressed location for sf_dir's published embedding
-    artifacts: fixture bytes (path, size, mtime) + the live algorithm
-    parameters."""
-    from .storeutil import store_base
+def _store(spark, sf_dir, name, build, bucketed=None) -> DataFrame:
+    """One of the index's published artifacts (storeutil.artifact)."""
+    from .storeutil import artifact
 
-    base = store_base(EMB_STORE_ENV, "spark_graft_emb_store")
-    emb = os.path.abspath(os.path.join(sf_dir, "embeddings.parquet"))
-    try:
-        st = os.stat(emb)
-        ident = f"{emb}|{st.st_size}|{st.st_mtime_ns}"
-    except OSError:
-        ident = f"{emb}|missing"
-    fp = hashlib.md5(f"{ident}|{_algo_fp()}".encode()).hexdigest()[:16]
-    return os.path.join(base, fp, leaf)
-
-
-def _memo_key(spark: SparkSession, sf_dir: str) -> _MemoKey:
-    return (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        store_table_dir(sf_dir, "x"),
+    return artifact(
+        spark,
+        name,
+        env=EMB_STORE_ENV,
+        inputs=[os.path.join(sf_dir, "embeddings.parquet")],
+        params=_algo_fp(),
+        build=build,
+        bucketed=bucketed,
     )
 
 
@@ -132,47 +105,16 @@ def sig_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     side of incremental embedding dedup: (vec_id, tbl, bucket) written
     ONCE, hash-bucketed by the join key, and every maintenance batch
     equi-joins arrival signatures against it with NO Exchange on the
-    index side and no per-run O(index) GEMM re-derivation. A fresh
-    session that finds the files already on disk re-registers the
-    external bucketed table via DDL (no rewrite)."""
-    key = _memo_key(spark, sf_dir)
-    cached = _SIG_STORE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    from . import sinks
-
-    path = store_table_dir(sf_dir, "emb_sigs")
-    # table identity binds to the FULL path (not just the fixture
-    # fingerprint): two store base dirs in one session must not share
-    # a catalog entry pointing at whichever was registered first
-    name = "emb_sigs_" + hashlib.md5(path.encode()).hexdigest()[:12]
-    if not spark.catalog.tableExists(name):
-        if os.path.isdir(path) and any(
-            f.endswith(".parquet") for f in os.listdir(path)
-        ):
-            spark.sql(
-                f"CREATE TABLE {name} "
-                f"(vec_id BIGINT, tbl INT, bucket BIGINT) "
-                f"USING PARQUET "
-                f"CLUSTERED BY (tbl, bucket) "
-                f"INTO {_N_SIG_BUCKETS} BUCKETS "
-                f"LOCATION '{path}'"
-            )
-        else:
-            sigs = signatures(spark, sf_dir).select(
-                "vec_id", "tbl", "bucket"
-            )
-            if sigs.limit(1).count() == 0:  # bounded 1-value scalar
-                return sigs
-            sinks.save_bucketed(
-                sigs, name, path,
-                bucket_by=["tbl", "bucket"],
-                n_buckets=_N_SIG_BUCKETS,
-                sort_by=["tbl", "bucket"],
-            )
-    table = spark.table(name)
-    _SIG_STORE_CACHE[key] = table
-    return table
+    index side and no per-run O(index) GEMM re-derivation."""
+    return _store(
+        spark, sf_dir, "emb_sigs",
+        lambda: signatures(spark, sf_dir).select("vec_id", "tbl", "bucket"),
+        bucketed=(
+            "vec_id BIGINT, tbl INT, bucket BIGINT",
+            ("tbl", "bucket"),
+            _N_SIG_BUCKETS,
+        ),
+    )
 
 
 def cos_prefilter_kernel():
@@ -251,20 +193,11 @@ def pair_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     reranks on the exact fold cosine both engines share bitwise, so
     content is exactly ``embedding_neardup_lsh``'s registered output
     (the GEMM prefilter that operator adds only discards pairs the
-    exact threshold rejects anyway). An empty pair set is returned
-    directly without publishing (publish_versioned rejects empty
-    tables by design)."""
-    key = _memo_key(spark, sf_dir)
-    cached = _EMB_PAIR_STORE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    from .publish import publish_versioned, read_versioned
+    exact threshold rejects anyway), plus ``cos_bp`` so threshold
+    sweeps are pure store reads."""
     from .queries.similarity_ops import load_vectors
 
-    table_dir = store_table_dir(sf_dir, "emb_pairs")
-    try:
-        stored = read_versioned(spark, table_dir)
-    except FileNotFoundError:
+    def build() -> DataFrame:
         b = sig_store(spark, sf_dir)
         cand = (
             b.alias("a")
@@ -276,15 +209,11 @@ def pair_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .distinct()
         )
-        computed = verify_pairs(
+        return verify_pairs(
             cand, load_vectors(spark, sf_dir), include_cos_bp=True
         )
-        if computed.limit(1).count() == 0:  # bounded 1-value scalar
-            return computed
-        publish_versioned(computed, table_dir)
-        stored = read_versioned(spark, table_dir)
-    _EMB_PAIR_STORE_CACHE[key] = stored
-    return stored
+
+    return _store(spark, sf_dir, "emb_pairs", build)
 
 
 def cluster_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -292,22 +221,11 @@ def cluster_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     EMB_ARRIVAL_RESIDUE) as a published artifact — the state
     incremental cluster maintenance starts from. Columns: (vec_id,
     cluster_id), cluster_id = min member id; singletons map to
-    themselves. An empty existing corpus returns the computed empty
-    frame directly."""
-    key = _memo_key(spark, sf_dir)
-    cached = _EMB_CLUSTER_STORE_CACHE.get(key)
-    if cached is not None:
-        return cached
+    themselves."""
     from .operators import connected_components_auto
-    from .publish import publish_versioned, read_versioned
     from .queries.similarity_ops import load_vectors
 
-    table_dir = store_table_dir(
-        sf_dir, f"emb_clusters_r{EMB_ARRIVAL_RESIDUE}"
-    )
-    try:
-        stored = read_versioned(spark, table_dir)
-    except FileNotFoundError:
+    def build() -> DataFrame:
         is_existing = lambda c: (F.col(c) % 10) != EMB_ARRIVAL_RESIDUE  # noqa: E731
         pairs = pair_store(spark, sf_dir).filter(
             is_existing("vec_a") & is_existing("vec_b")
@@ -318,16 +236,14 @@ def cluster_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("vec_id")
             .filter(is_existing("vec_id"))
         )
-        computed = (
+        return (
             ids.join(labels, ids["vec_id"] == labels["vertex"], "left")
             .select(
                 "vec_id",
                 F.coalesce("component", "vec_id").alias("cluster_id"),
             )
         )
-        if computed.limit(1).count() == 0:  # bounded 1-value scalar
-            return computed
-        publish_versioned(computed, table_dir)
-        stored = read_versioned(spark, table_dir)
-    _EMB_CLUSTER_STORE_CACHE[key] = stored
-    return stored
+
+    return _store(
+        spark, sf_dir, f"emb_clusters_r{EMB_ARRIVAL_RESIDUE}", build
+    )

@@ -83,7 +83,6 @@ def replay_ingest(
     pair_cols: tuple[str, str],
     band_cols: Sequence[str],
     pair_schema: str,
-    store_env: str,
     scratch_prefix: str,
     table_prefix: str,
     n_slices: int = 3,
@@ -94,8 +93,6 @@ def replay_ingest(
     ordered by ``pair_cols``, distinct, localCheckpoint-ed so the
     scratch tree is removable immediately). Callers memoize the
     result and handle family-specific store publication."""
-    from .storeutil import store_base
-
     empty = spark.createDataFrame([], pair_schema)
     if docs.isEmpty():
         return empty
@@ -115,9 +112,7 @@ def replay_ingest(
         slices.append(docs.filter((d >= a) & (d < b)))
     slices.append(docs.filter(d >= cuts[-1]))
 
-    base = store_base(store_env, f"spark_graft_{scratch_prefix.rstrip('_')}")
-    os.makedirs(base, exist_ok=True)
-    root = tempfile.mkdtemp(prefix=scratch_prefix, dir=base)
+    root = tempfile.mkdtemp(prefix=scratch_prefix)
     src = os.path.join(root, "src")
     state_dir = os.path.join(root, "state")
     pair_dir = os.path.join(root, "pairs")

@@ -19,12 +19,13 @@ Per-modality pieces a spec supplies:
 - ``hash_frame``   — the same kernel over an ARBITRARY (doc_id, text)
   frame with a frozen scene count: what a maintenance batch runs over
   its arrivals only.
-- naming/env knobs — store env var, content-address algorithm
-  fingerprint (LIVE constants, never hand-written literals — the
-  pair-store r8 lesson), catalog prefixes. The image tier's knobs
-  reproduce its round-12 identities exactly (artifact paths, catalog
-  names, ingest scratch env), so published artifacts and tests carry
-  over unchanged.
+- ``store_env`` / ``algo_fp`` — the store's base-dir env var and the
+  LIVE algorithm constants its content address includes. The four
+  published tables (hashes, bands, pairs, clusters) are
+  ``storeutil.artifact`` stores named ``<spec.name>_<table>``; that
+  function holds the addressing, memo and build-on-miss mechanics.
+- ``catalog_prefix`` — the image tier keeps its round-12 "img" prefix
+  for the streaming-ingest scratch tree and catalog names.
 
 Shared machinery the engine composes (lazily, to keep the dependency
 one-way: query modules import the engine, the engine imports the
@@ -40,7 +41,6 @@ scope (SURVEY.md §2 "LLM-data-pipeline operators").
 
 from __future__ import annotations
 
-import hashlib
 import os
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -67,13 +67,9 @@ class MediaIndexSpec:
     hash_frame: Callable[[SparkSession, DataFrame, int], DataFrame]
     # doc_id % 3 residue of the synthetic "arrival batch"
     arrival_residue: int
-    # bucketed band-table knobs; catalog_prefix keeps the image tier's
-    # round-12 catalog identity ("img") stable
+    # bucket count of the band table and the ingest band table
     n_buckets: int = 8
     catalog_prefix: str | None = None
-    # streaming-ingest scratch knobs (env var + mkdtemp prefix)
-    ingest_env: str | None = None
-    ingest_prefix: str | None = None
     # replay micro-batch count (the stream_upsert_publish protocol)
     n_slices: int = 3
 
@@ -81,57 +77,25 @@ class MediaIndexSpec:
     def cat(self) -> str:
         return self.catalog_prefix or self.name
 
-    @property
-    def ing_env(self) -> str:
-        return self.ingest_env or f"SPARK_GRAFT_{self.name.upper()}_INGEST_STORE"
 
-    @property
-    def ing_prefix(self) -> str:
-        return self.ingest_prefix or f"{self.name}ingest_"
+# result memos per (applicationId, sf_dir, spec.name): the persisted
+# existing+arrivals index and the streamed pair delta
+_INCR_INDEX_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+_INGEST_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
-# Memoized per _memo_key: (applicationId, sf_dir, spec.name,
-# resolved store table dir) — the last element makes a mid-session
-# SPARK_GRAFT_*_STORE change naturally miss the cache instead of
-# serving the previously published artifact (r13 ADVICE #2). The
-# image tier's round-12 module-level caches alias these dicts so
-# existing tests' .clear() calls (and bench._reset's package-wide
-# *_CACHE sweep) reach them unchanged.
-_MemoKey = tuple[str, str, str, str]
-_HASH_STORE_CACHE: dict[_MemoKey, DataFrame] = {}
-_BAND_STORE_CACHE: dict[_MemoKey, DataFrame] = {}
-_INCR_INDEX_CACHE: dict[_MemoKey, DataFrame] = {}
-_INGEST_CACHE: dict[_MemoKey, DataFrame] = {}
+def _store(spark, sf_dir, spec, name, build, bucketed=None) -> DataFrame:
+    """One of the modality's published artifacts (storeutil.artifact)."""
+    from .storeutil import artifact
 
-
-def store_table_dir(spec: MediaIndexSpec, sf_dir: str) -> str:
-    """Content-addressed location for sf_dir's published hash index:
-    fixture bytes (path, size, mtime) + the live algorithm parameters
-    + an algo version (all inside spec.algo_fp)."""
-    from .storeutil import store_base
-
-    base = store_base(spec.store_env, f"spark_graft_{spec.name[:3]}_store")
-    doc = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    try:
-        st = os.stat(doc)
-        ident = f"{doc}|{st.st_size}|{st.st_mtime_ns}"
-    except OSError:
-        ident = f"{doc}|missing"
-    fp = hashlib.md5(f"{ident}|{spec.algo_fp}".encode()).hexdigest()[:16]
-    return os.path.join(base, fp, f"{spec.name}_hashes")
-
-
-def _memo_key(
-    spark: SparkSession, sf_dir: str, spec: MediaIndexSpec
-) -> tuple[str, str, str, str]:
-    """Cache key for the published-artifact memos: binds the RESOLVED
-    store table dir (env var + fixture fingerprint) so changing
-    SPARK_GRAFT_*_STORE mid-session misses the cache naturally."""
-    return (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        spec.name,
-        store_table_dir(spec, sf_dir),
+    return artifact(
+        spark,
+        f"{spec.name}_{name}",
+        env=spec.store_env,
+        inputs=[os.path.join(sf_dir, "documents.parquet")],
+        params=spec.algo_fp,
+        build=build,
+        bucketed=bucketed,
     )
 
 
@@ -141,29 +105,12 @@ def hash_store(
     """The fingerprint index AS A PUBLISHED ARTIFACT — the
     verified_pair_store pattern for the media tier: computed once per
     corpus version (the producer pays the Arrow codec kernel wherever
-    IT is measured), published through the K8 validated-swap layer,
-    read by every maintenance batch / dedup report afterwards. The
-    parquet roundtrip of long columns is exact, so correctness is
-    unaffected. An EMPTY index (legal on an empty fixture) is
-    returned directly without publishing (publish_versioned rejects
-    empty tables by design)."""
-    key = _memo_key(spark, sf_dir, spec)
-    cached = _HASH_STORE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    from .publish import publish_versioned, read_versioned
-
-    table_dir = store_table_dir(spec, sf_dir)
-    try:
-        stored = read_versioned(spark, table_dir)
-    except FileNotFoundError:
-        computed = spec.hash_table(spark, sf_dir)
-        if computed.limit(1).count() == 0:  # bounded 1-value scalar
-            return computed
-        publish_versioned(computed, table_dir)
-        stored = read_versioned(spark, table_dir)
-    _HASH_STORE_CACHE[key] = stored
-    return stored
+    IT is measured) and read by every maintenance batch / dedup
+    report afterwards. The parquet roundtrip of long columns is
+    exact, so correctness is unaffected."""
+    return _store(
+        spark, sf_dir, spec, "hashes", lambda: spec.hash_table(spark, sf_dir)
+    )
 
 
 def band_store(
@@ -171,57 +118,21 @@ def band_store(
 ) -> DataFrame:
     """The index's BAND table as a published BUCKETED layout — the
     probe side of incremental media dedup: the (band, bval) exploded
-    table is written ONCE, hash-bucketed by the join key via
-    sinks.save_bucketed, and every maintenance batch equi-joins
-    arrival bands against it with NO Exchange on the index side and
-    no per-run O(index) band re-derivation. A fresh session that
-    finds the files already on disk re-registers the external
-    bucketed table via DDL (no rewrite)."""
-    key = _memo_key(spark, sf_dir, spec)
-    cached = _BAND_STORE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    from . import sinks
+    table is written ONCE, hash-bucketed by the join key, and every
+    maintenance batch equi-joins arrival bands against it with NO
+    Exchange on the index side and no per-run O(index) band
+    re-derivation."""
     from .queries.round12_ops import _band_frame
 
-    path = os.path.join(
-        os.path.dirname(store_table_dir(spec, sf_dir)), f"{spec.name}_bands"
+    return _store(
+        spark, sf_dir, spec, "bands",
+        lambda: _band_frame(hash_store(spark, sf_dir, spec)),
+        bucketed=(
+            "media_id BIGINT, band INT, bval BIGINT",
+            ("band", "bval"),
+            spec.n_buckets,
+        ),
     )
-    # table identity binds to the FULL path (not just the fixture
-    # fingerprint): two store base dirs in one session must not share
-    # a catalog entry pointing at whichever was registered first
-    name = (
-        f"{spec.cat}_bands_" + hashlib.md5(path.encode()).hexdigest()[:12]
-    )
-    if not spark.catalog.tableExists(name):
-        if os.path.isdir(path) and any(
-            f.endswith(".parquet") for f in os.listdir(path)
-        ):
-            spark.sql(
-                f"CREATE TABLE {name} "
-                f"(media_id BIGINT, band INT, bval BIGINT) "
-                f"USING PARQUET "
-                f"CLUSTERED BY (band, bval) "
-                f"INTO {spec.n_buckets} BUCKETS "
-                f"LOCATION '{path}'"
-            )
-        else:
-            bands = _band_frame(hash_store(spark, sf_dir, spec))
-            if bands.limit(1).count() == 0:  # bounded 1-value scalar
-                return bands
-            sinks.save_bucketed(
-                bands, name, path,
-                bucket_by=["band", "bval"],
-                n_buckets=spec.n_buckets,
-                sort_by=["band", "bval"],
-            )
-    table = spark.table(name)
-    _BAND_STORE_CACHE[key] = table
-    return table
-
-
-_CLUSTER_STORE_CACHE: dict[_MemoKey, DataFrame] = {}
-_PAIR_STORE_CACHE: dict[_MemoKey, DataFrame] = {}
 
 
 def pair_store(
@@ -242,23 +153,10 @@ def pair_store(
     even the one-time build never re-runs the Arrow codec kernel.
     Content is exactly ``_pairs_from(hash_table)`` (parquet
     roundtrips of long columns are exact); columns
-    (media_a, media_b, ham_d), normalized media_a < media_b. An
-    empty pair set (legal: a corpus with no near-dups) is returned
-    directly without publishing (publish_versioned rejects empty
-    tables by design)."""
-    key = _memo_key(spark, sf_dir, spec)
-    cached = _PAIR_STORE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    from .publish import publish_versioned, read_versioned
+    (media_a, media_b, ham_d), normalized media_a < media_b."""
     from .queries.round12_ops import HAM_T
 
-    table_dir = os.path.join(
-        os.path.dirname(store_table_dir(spec, sf_dir)), f"{spec.name}_pairs"
-    )
-    try:
-        stored = read_versioned(spark, table_dir)
-    except FileNotFoundError:
+    def build() -> DataFrame:
         h = hash_store(spark, sf_dir, spec)
         if h.limit(1).count() == 0:  # bounded 1-value scalar
             return spark.createDataFrame(
@@ -285,19 +183,15 @@ def pair_store(
             F.col("dhash_lo").alias("lo_b"),
             F.col("dhash_hi").alias("hi_b"),
         )
-        computed = (
+        return (
             cand.join(ha, "media_a")
             .join(hb, "media_b")
             .withColumn("ham_d", _ham())
             .filter(F.col("ham_d") <= HAM_T)
             .select("media_a", "media_b", "ham_d")
         )
-        if computed.limit(1).count() == 0:  # bounded 1-value scalar
-            return computed
-        publish_versioned(computed, table_dir)
-        stored = read_versioned(spark, table_dir)
-    _PAIR_STORE_CACHE[key] = stored
-    return stored
+
+    return _store(spark, sf_dir, spec, "pairs", build)
 
 
 def cluster_store(
@@ -311,30 +205,18 @@ def cluster_store(
     every ingest batch MERGES into it (incremental_clusters below)
     instead of re-clustering the corpus. Columns: (media_id,
     cluster_id), cluster_id = min member id; singletons map to
-    themselves. An empty existing corpus returns the computed empty
-    frame directly (publish_versioned rejects empty tables)."""
-    key = _memo_key(spark, sf_dir, spec)
-    cached = _CLUSTER_STORE_CACHE.get(key)
-    if cached is not None:
-        return cached
+    themselves."""
     from .operators import connected_components_auto
-    from .publish import publish_versioned, read_versioned
     from .queries.round12_ops import _pairs_from
 
-    table_dir = os.path.join(
-        os.path.dirname(store_table_dir(spec, sf_dir)),
-        f"{spec.name}_clusters_r{spec.arrival_residue}",
-    )
-    try:
-        stored = read_versioned(spark, table_dir)
-    except FileNotFoundError:
+    def build() -> DataFrame:
         h = hash_store(spark, sf_dir, spec).filter(
             F.col("media_id") % 3 != spec.arrival_residue
         )
         labels = connected_components_auto(
             _pairs_from(h), "media_a", "media_b"
         )
-        computed = (
+        return (
             h.select("media_id")
             .join(labels, h["media_id"] == labels["vertex"], "left")
             .select(
@@ -342,12 +224,10 @@ def cluster_store(
                 F.coalesce("component", "media_id").alias("cluster_id"),
             )
         )
-        if computed.limit(1).count() == 0:  # bounded 1-value scalar
-            return computed
-        publish_versioned(computed, table_dir)
-        stored = read_versioned(spark, table_dir)
-    _CLUSTER_STORE_CACHE[key] = stored
-    return stored
+
+    return _store(
+        spark, sf_dir, spec, f"clusters_r{spec.arrival_residue}", build
+    )
 
 
 def incremental_clusters(
@@ -432,7 +312,7 @@ def incremental_delta(
     # table and both Hamming-lookup sides). Memoized per (app,
     # sf_dir, modality) so repeated invocations don't stack cached
     # RDDs (the r12 ADVICE #1 discipline).
-    key = _memo_key(spark, sf_dir, spec)
+    key = (spark.sparkContext.applicationId, sf_dir, spec.name)
     h = _INCR_INDEX_CACHE.get(key)
     if h is None:
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -534,11 +414,7 @@ def streaming_ingest(
         _scene_count,
     )
 
-    # Same _memo_key discipline as the four store memos (r14 ADVICE
-    # #1): the checkpointed result is location-independent once built,
-    # but the uniform key keeps the mid-session-env-change staleness
-    # class closed for every memo in this module.
-    key = _memo_key(spark, sf_dir, spec)
+    key = (spark.sparkContext.applicationId, sf_dir, spec.name)
     cached = _INGEST_CACHE.get(key)
     if cached is not None:
         return cached
@@ -586,8 +462,7 @@ def streaming_ingest(
         pair_cols=("media_a", "media_b"),
         band_cols=("band", "bval"),
         pair_schema="media_a long, media_b long, ham_d int",
-        store_env=spec.ing_env,
-        scratch_prefix=spec.ing_prefix,
+        scratch_prefix=f"{spec.cat}ingest_",
         table_prefix=f"{spec.cat}ingest_bands_",
         n_slices=spec.n_slices,
         n_buckets=spec.n_buckets,

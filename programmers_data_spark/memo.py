@@ -6,6 +6,8 @@ tables, tokenized projections). Each is memoized in a MODULE-LEVEL
 dict whose name ends in ``_CACHE``, keyed by
 ``(spark.sparkContext.applicationId, sf_dir)`` so a stale entry can
 never leak across sessions or scale factors.
+Published artifact stores share one such dict,
+``storeutil._ARTIFACT_CACHE``.
 
 The convention is load-bearing: ``bench.py``'s per-query ``_reset``
 clears every such dict via :func:`clear_memo_caches` so each timed

@@ -23,11 +23,6 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
-from ..storeutil import store_base
-
-# Operator-overridable base for the written shard trees (bench pins a
-# fresh one per run; default is the per-uid tempdir base).
-JSONL_STORE_ENV = "SPARK_GRAFT_JSONL_STORE"
 
 N_SHARDS = 8
 
@@ -107,9 +102,7 @@ def jsonl_shard_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     if cached is not None:
         return cached
 
-    base = store_base(JSONL_STORE_ENV, "spark_graft_jsonl")
-    os.makedirs(base, exist_ok=True)  # an env-overridden base may be new
-    out = tempfile.mkdtemp(prefix="jsonl_rt_", dir=base)
+    out = tempfile.mkdtemp(prefix="jsonl_rt_")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
@@ -151,10 +144,6 @@ def jsonl_shard_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------------ ORC roundtrip
-
-# Operator-overridable base for the written ORC trees (bench pins a
-# fresh one per run; default is the per-uid tempdir base).
-ORC_STORE_ENV = "SPARK_GRAFT_ORC_STORE"
 
 # roundtrip result memo per (applicationId, sf_dir) — *_CACHE contract
 _ORC_CACHE: dict[tuple[str, str], DataFrame] = {}
@@ -199,9 +188,7 @@ def orc_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     if cached is not None:
         return cached
 
-    base = store_base(ORC_STORE_ENV, "spark_graft_orc")
-    os.makedirs(base, exist_ok=True)  # an env-overridden base may be new
-    out = os.path.join(tempfile.mkdtemp(prefix="orc_rt_", dir=base), "docs")
+    out = os.path.join(tempfile.mkdtemp(prefix="orc_rt_"), "docs")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )

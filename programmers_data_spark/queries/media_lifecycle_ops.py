@@ -65,9 +65,8 @@ VIDEO_ARRIVAL_RESIDUE = 2
 AUDIO_SPEC = media_index.MediaIndexSpec(
     name="audio",
     store_env="SPARK_GRAFT_AUDIO_STORE",
-    # content-address fingerprint: LIVE algorithm constants (the
-    # pair-store r8 lesson)
-    algo_fp=f"audiofp|{SCENE_MIN}|{SCENE_DOCS}|{AUDIO_SAMPLES}|{AUDIO_FRAMES}|v1",
+    # live algorithm constants in the content address
+    algo_fp=f"audiofp|{SCENE_MIN}|{SCENE_DOCS}|{AUDIO_SAMPLES}|{AUDIO_FRAMES}",
     hash_table=_audio_hash_table,
     hash_frame=_audio_frame,
     arrival_residue=AUDIO_ARRIVAL_RESIDUE,
@@ -76,7 +75,7 @@ AUDIO_SPEC = media_index.MediaIndexSpec(
 VIDEO_SPEC = media_index.MediaIndexSpec(
     name="video",
     store_env="SPARK_GRAFT_VIDEO_STORE",
-    algo_fp=f"videofold|{SCENE_MIN}|{SCENE_DOCS}|{IMG_W}x{IMG_H}|{VIDEO_FRAMES}|v1",
+    algo_fp=f"videofold|{SCENE_MIN}|{SCENE_DOCS}|{IMG_W}x{IMG_H}|{VIDEO_FRAMES}",
     hash_table=_video_hash_table,
     hash_frame=_video_hash_frame,
     arrival_residue=VIDEO_ARRIVAL_RESIDUE,

@@ -672,7 +672,6 @@ def stream_upsert_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     from ..publish import incremental_upsert
-    from ..storeutil import store_base
 
     key = (spark.sparkContext.applicationId, sf_dir)
     cached = _UPSERT_PUB_CACHE.get(key)
@@ -693,9 +692,7 @@ def stream_upsert_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id long, last_event_id long, last_value double,"
             " last_ts_us long",
         )
-    base = store_base("SPARK_GRAFT_UPSERT_PUB_STORE", "spark_graft_upub")
-    os.makedirs(base, exist_ok=True)
-    root = tempfile.mkdtemp(prefix="upub_", dir=base)
+    root = tempfile.mkdtemp(prefix="upub_")
     src = os.path.join(root, "src")
     store = os.path.join(root, "store")
     n = UPSERT_PUB_N_SLICES

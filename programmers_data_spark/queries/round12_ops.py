@@ -410,24 +410,20 @@ IMG_INGEST_N_SLICES = 3
 # The image tier's instantiation of the shared media-index
 # maintenance engine (media_index.py). Round 12 built this lifecycle
 # for image alone; round 13 factored it into the engine so audio and
-# video run the SAME code — the knobs below reproduce the round-12
-# artifact paths, catalog names, and scratch envs exactly, so
-# published artifacts and tests carry over unchanged, and the
-# driver-certified image rows (image_neardup_incremental,
+# video run the SAME code — the knobs below keep the round-12 store
+# names and "img" scratch prefix, and the oracle-certified image rows
+# (image_neardup_incremental,
 # stream_image_neardup_ingest) certify the engine itself.
 IMAGE_SPEC = media_index.MediaIndexSpec(
     name="image",
     store_env=IMG_STORE_ENV,
-    # content-address fingerprint: LIVE algorithm constants, never
-    # hand-written literals (the pair-store r8 lesson)
-    algo_fp=f"imgdhash|{SCENE_MIN}|{SCENE_DOCS}|{IMG_W}x{IMG_H}|v1",
+    # live algorithm constants in the content address
+    algo_fp=f"imgdhash|{SCENE_MIN}|{SCENE_DOCS}|{IMG_W}x{IMG_H}",
     hash_table=_image_hash_table,
     hash_frame=_hash_frame,
     arrival_residue=IMG_ARRIVAL_RESIDUE,
     n_buckets=IMG_BAND_BUCKETS,
     catalog_prefix="img",
-    ingest_env="SPARK_GRAFT_IMG_INGEST_STORE",
-    ingest_prefix="imgingest_",
     n_slices=IMG_INGEST_N_SLICES,
 )
 
@@ -871,10 +867,6 @@ def crossmodal_dup_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the rest. A pure function of the id, so both engines agree on the
 # split for free and the full rebuild is a split-independent oracle.
 
-# the persisted existing+arrivals index — aliased to the shared
-# engine's cache (see the published index seam below)
-_IMG_INCR_INDEX_CACHE = media_index._INCR_INDEX_CACHE
-
 
 @query(
     "image_neardup_incremental",
@@ -922,9 +914,6 @@ def image_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------- streaming index maintenance
-
-# aliased to the shared engine's cache (see the published index seam)
-_IMG_INGEST_CACHE = media_index._INGEST_CACHE
 
 
 @query(
@@ -1199,23 +1188,7 @@ def audio_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The published-artifact seam, delegated to the shared engine
 # (media_index.py) with IMAGE_SPEC (defined with the constants near
-# the hash table above) — the round-12 bespoke implementation moved
-# to the engine verbatim when the audio/video tiers adopted the same
-# lifecycle, preserving every identity (artifact paths, catalog
-# names, content addressing, scratch envs). Caches are aliased so
-# existing .clear() call sites and bench._reset's package-wide
-# *_CACHE sweep reach the engine's memos.
-_IMG_STORE_CACHE = media_index._HASH_STORE_CACHE
-
-_IMG_BAND_STORE_CACHE = media_index._BAND_STORE_CACHE
-
-
-def _img_store_table(sf_dir: str) -> str:
-    """Content-addressed location for sf_dir's published image-hash
-    index (media_index.store_table_dir with IMAGE_SPEC): fixture
-    bytes (path, size, mtime) + the LIVE algorithm parameters (never
-    hand-written literals — the pair-store r8 lesson)."""
-    return media_index.store_table_dir(IMAGE_SPEC, sf_dir)
+# the hash table above).
 
 
 def image_band_store(spark: SparkSession, sf_dir: str) -> DataFrame:

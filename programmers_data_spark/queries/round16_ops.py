@@ -228,7 +228,7 @@ def stream_embedding_neardup_ingest(
     vector store); nothing about earlier batches is re-signed or
     re-banded. At 100 TB this is the vector-index ingest job: a day's
     embeddings stream in, the published ANN index absorbs them."""
-    from ..embedding_index import EMB_INGEST_ENV, verify_pairs
+    from ..embedding_index import verify_pairs
     from ..ingest import replay_ingest
 
     key = (spark.sparkContext.applicationId, sf_dir)
@@ -260,7 +260,6 @@ def stream_embedding_neardup_ingest(
         pair_cols=("vec_a", "vec_b"),
         band_cols=("tbl", "bucket"),
         pair_schema="vec_a long, vec_b long",
-        store_env=EMB_INGEST_ENV,
         scratch_prefix="embingest_",
         table_prefix="embingest_bands_",
         n_slices=N_EMB_SLICES,

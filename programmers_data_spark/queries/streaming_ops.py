@@ -691,11 +691,11 @@ def stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     to a Kafka source with the flush row replaced by real watermark
     advancement; per-window state and output are unchanged."""
     import os
+    import shutil
     import tempfile
     import uuid
 
     from ..catalog import load_table
-    from ..storeutil import store_base
 
     key = (spark.sparkContext.applicationId, sf_dir)
     cached = _LATE_AUDIT_CACHE.get(key)
@@ -703,9 +703,8 @@ def stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         return cached
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
-    base = store_base("SPARK_GRAFT_LATE_STORE", "spark_graft_late")
-    os.makedirs(base, exist_ok=True)  # an env-overridden base may be new
-    src = os.path.join(tempfile.mkdtemp(prefix="late_", dir=base), "src")
+    root = tempfile.mkdtemp(prefix="late_")
+    src = os.path.join(root, "src")
 
     # batch 0 on disk BEFORE the stream starts; batches 1 and 2 are
     # dropped in between processAllAvailable() drains, so arrival
@@ -748,6 +747,8 @@ def stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()  # flush: closes every real window
     finally:
         q.stop()
+        # the result materializes from the memory sink, never from src
+        shutil.rmtree(root, ignore_errors=True)
 
     accepted = (
         spark.table(sink)
@@ -875,11 +876,11 @@ def stream_dedup_horizon_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropDuplicates); the audit join is key-cardinality. At 100 TB the
     same plan binds to a Kafka source; keys = message ids."""
     import os
+    import shutil
     import tempfile
     import uuid
 
     from ..catalog import load_table
-    from ..storeutil import store_base
 
     key = (spark.sparkContext.applicationId, sf_dir)
     cached = _DEDUP_AUDIT_CACHE.get(key)
@@ -891,9 +892,8 @@ def stream_dedup_horizon_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("event_id") % 2).alias("leg"),
         "ts",
     )
-    base = store_base("SPARK_GRAFT_DEDUP_AUDIT_STORE", "spark_graft_dedup")
-    os.makedirs(base, exist_ok=True)
-    src = os.path.join(tempfile.mkdtemp(prefix="dedup_", dir=base), "src")
+    root = tempfile.mkdtemp(prefix="dedup_")
+    src = os.path.join(root, "src")
 
     # leg 0 lands BEFORE the stream starts; leg 1 between drains —
     # arrival order, and therefore the watermark trajectory, is exact
@@ -921,6 +921,8 @@ def stream_dedup_horizon_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()  # leg 1: dedup/late/re-admit HERE
     finally:
         q.stop()
+        # the result materializes from the memory sink, never from src
+        shutil.rmtree(root, ignore_errors=True)
 
     emitted = (
         spark.table(sink)

@@ -28,24 +28,10 @@ from programmers_data_spark.session import get_spark
 def _fresh_stores() -> None:
     import tempfile
 
-    from programmers_data_spark.embedding_index import EMB_STORE_ENV
-    from programmers_data_spark.queries.dedup_ops import PAIR_STORE_ENV
-    from programmers_data_spark.queries.interchange_ops import JSONL_STORE_ENV
-    from programmers_data_spark.queries.media_lifecycle_ops import (
-        AUDIO_SPEC,
-        VIDEO_SPEC,
-    )
-    from programmers_data_spark.queries.round12_ops import IMG_STORE_ENV
+    from programmers_data_spark.storeutil import STORE_ENVS
 
-    for env, pfx in [
-        (PAIR_STORE_ENV, "pds_sweep_pairs_"),
-        (JSONL_STORE_ENV, "pds_sweep_jsonl_"),
-        (IMG_STORE_ENV, "pds_sweep_img_"),
-        (AUDIO_SPEC.store_env, "pds_sweep_aud_"),
-        (VIDEO_SPEC.store_env, "pds_sweep_vid_"),
-        (EMB_STORE_ENV, "pds_sweep_emb_"),
-    ]:
-        os.environ[env] = tempfile.mkdtemp(prefix=pfx)
+    for env in STORE_ENVS:
+        os.environ[env] = tempfile.mkdtemp(prefix="pds_sweep_store_")
 
 
 def main() -> int:

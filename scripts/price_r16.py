@@ -20,21 +20,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import tempfile
 
-from programmers_data_spark.embedding_index import EMB_STORE_ENV
-from programmers_data_spark.queries.dedup_ops import PAIR_STORE_ENV
-from programmers_data_spark.queries.interchange_ops import JSONL_STORE_ENV
-from programmers_data_spark.queries.media_lifecycle_ops import (
-    AUDIO_SPEC,
-    VIDEO_SPEC,
-)
-from programmers_data_spark.queries.round12_ops import IMG_STORE_ENV
+from programmers_data_spark.storeutil import STORE_ENVS
 
-os.environ[PAIR_STORE_ENV] = tempfile.mkdtemp(prefix="pds_price16_pairs_")
-os.environ[JSONL_STORE_ENV] = tempfile.mkdtemp(prefix="pds_price16_jsonl_")
-os.environ[IMG_STORE_ENV] = tempfile.mkdtemp(prefix="pds_price16_img_")
-os.environ[AUDIO_SPEC.store_env] = tempfile.mkdtemp(prefix="pds_price16_aud_")
-os.environ[VIDEO_SPEC.store_env] = tempfile.mkdtemp(prefix="pds_price16_vid_")
-os.environ[EMB_STORE_ENV] = tempfile.mkdtemp(prefix="pds_price16_emb_")
+for env in STORE_ENVS:
+    os.environ[env] = tempfile.mkdtemp(prefix="pds_price16_store_")
 
 from bench import (  # noqa: E402
     CONTROL_POLLUTED_RATIO,

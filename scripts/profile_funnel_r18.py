@@ -32,26 +32,10 @@ def _reset(spark):
 
 
 def _fresh_stores():
-    from programmers_data_spark.derived_store import DERIV_STORE_ENV
-    from programmers_data_spark.embedding_index import EMB_STORE_ENV
-    from programmers_data_spark.queries.dedup_ops import PAIR_STORE_ENV
-    from programmers_data_spark.queries.interchange_ops import JSONL_STORE_ENV
-    from programmers_data_spark.queries.media_lifecycle_ops import (
-        AUDIO_SPEC,
-        VIDEO_SPEC,
-    )
-    from programmers_data_spark.queries.round12_ops import IMG_STORE_ENV
+    from programmers_data_spark.storeutil import STORE_ENVS
 
-    for env, pfx in [
-        (PAIR_STORE_ENV, "pds_prof_pairs_"),
-        (JSONL_STORE_ENV, "pds_prof_jsonl_"),
-        (IMG_STORE_ENV, "pds_prof_img_"),
-        (AUDIO_SPEC.store_env, "pds_prof_aud_"),
-        (VIDEO_SPEC.store_env, "pds_prof_vid_"),
-        (EMB_STORE_ENV, "pds_prof_emb_"),
-        (DERIV_STORE_ENV, "pds_prof_der_"),
-    ]:
-        os.environ[env] = tempfile.mkdtemp(prefix=pfx)
+    for env in STORE_ENVS:
+        os.environ[env] = tempfile.mkdtemp(prefix="pds_prof_store_")
 
 
 def timed(label, fn, spark, n=2):

@@ -282,22 +282,30 @@ def test_stream_ingest_equals_batch_pairs(spark, planted_dir):
     assert streamed.count() == 3  # the planted (0,23), (1,24), (2,25)
 
 
-def test_stream_ingest_cleans_scratch(spark, planted_dir):
+def test_stream_ingest_cleans_scratch(spark, planted_dir, monkeypatch):
     """The replay scratch tree is removed once the snapshot
-    localCheckpoints (the stream_upsert_publish discipline)."""
+    localCheckpoints (the stream_upsert_publish discipline). The
+    image tier keeps its round-12 scratch prefix."""
     import glob
+    import tempfile
 
-    from programmers_data_spark.queries import round12_ops
+    from programmers_data_spark.memo import clear_memo_caches
 
-    round12_ops._IMG_INGEST_CACHE.clear()
+    made = []
+    real_mkdtemp = tempfile.mkdtemp
+
+    def spy(*args, **kwargs):
+        made.append(real_mkdtemp(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", spy)
+    clear_memo_caches()
     registry.QUERIES["stream_image_neardup_ingest"](
         spark, planted_dir
     ).count()
-    from programmers_data_spark.storeutil import store_base
-
-    base = store_base(
-        "SPARK_GRAFT_IMG_INGEST_STORE", "spark_graft_imgingest"
-    )
+    scratch = [m for m in made if os.path.basename(m).startswith("imgingest_")]
+    assert len(scratch) == 1, made
+    base = tempfile.gettempdir()
     assert glob.glob(os.path.join(base, "imgingest_*")) == []
 
 
@@ -400,8 +408,10 @@ def test_image_hash_store_roundtrip(spark, planted_dir, tmp_path, monkeypatch):
     rows from the artifact."""
     from programmers_data_spark.queries import round12_ops
 
+    from programmers_data_spark.memo import clear_memo_caches
+
     monkeypatch.setenv(round12_ops.IMG_STORE_ENV, str(tmp_path))
-    round12_ops._IMG_STORE_CACHE.clear()
+    clear_memo_caches()
     first = round12_ops.image_hash_store(spark, planted_dir)
     direct = round12_ops._image_hash_table(spark, planted_dir)
     assert first.subtract(direct).count() == 0
@@ -412,7 +422,7 @@ def test_image_hash_store_roundtrip(spark, planted_dir, tmp_path, monkeypatch):
 
     gens = glob.glob(str(tmp_path) + "/*/image_hashes/*")
     assert gens, "nothing was published"
-    round12_ops._IMG_STORE_CACHE.clear()
+    clear_memo_caches()
     again = round12_ops.image_hash_store(spark, planted_dir)
     assert again.subtract(direct).count() == 0
     assert gens == glob.glob(str(tmp_path) + "/*/image_hashes/*")
@@ -492,11 +502,11 @@ def test_incremental_probe_index_side_plans_without_exchange(
 
     import pyspark.sql.functions as F
 
+    from programmers_data_spark.memo import clear_memo_caches
     from programmers_data_spark.queries import round12_ops
 
     monkeypatch.setenv(round12_ops.IMG_STORE_ENV, str(tmp_path))
-    round12_ops._IMG_STORE_CACHE.clear()
-    round12_ops._IMG_BAND_STORE_CACHE.clear()
+    clear_memo_caches()
     allb = round12_ops.image_band_store(spark, planted_dir)
     arrivals = round12_ops._image_hash_table(spark, planted_dir).filter(
         F.col("media_id") % 3 == round12_ops.IMG_ARRIVAL_RESIDUE
@@ -526,27 +536,25 @@ def test_band_store_reregisters_over_existing_files(
     import hashlib
     import os
 
+    from programmers_data_spark.memo import clear_memo_caches
     from programmers_data_spark.queries import round12_ops
 
     monkeypatch.setenv(round12_ops.IMG_STORE_ENV, str(tmp_path))
-    round12_ops._IMG_STORE_CACHE.clear()
-    round12_ops._IMG_BAND_STORE_CACHE.clear()
+    clear_memo_caches()
     first = round12_ops.image_band_store(spark, planted_dir)
     expected = round12_ops._band_frame(
         round12_ops._image_hash_table(spark, planted_dir)
     )
     assert first.subtract(expected).count() == 0
     assert expected.subtract(first).count() == 0
-    path = os.path.join(
-        os.path.dirname(round12_ops._img_store_table(planted_dir)),
-        "image_bands",
-    )
+    [path] = glob.glob(str(tmp_path / "*" / "image_bands"))
     files = sorted(glob.glob(path + "/*.parquet"))
     assert files, "band store not published"
     # simulate the fresh session: drop the catalog entry, keep files
-    name = "img_bands_" + hashlib.md5(path.encode()).hexdigest()[:12]
+    name = "image_bands_" + hashlib.md5(path.encode()).hexdigest()[:12]
+    assert spark.catalog.tableExists(name)
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    round12_ops._IMG_BAND_STORE_CACHE.clear()
+    clear_memo_caches()
     again = round12_ops.image_band_store(spark, planted_dir)
     assert sorted(glob.glob(path + "/*.parquet")) == files  # no rewrite
     assert again.subtract(expected).count() == 0

@@ -15,6 +15,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import pyspark.sql.functions as F  # noqa: E402
 
 from programmers_data_spark import media_index, registry  # noqa: E402
+from programmers_data_spark.memo import clear_memo_caches  # noqa: E402
 from programmers_data_spark.testing import compare_to_oracle  # noqa: E402
 
 registry.load_all()
@@ -50,10 +51,7 @@ def _isolate(monkeypatch, tmp_path, spec):
     """Point a spec's published store at a fresh dir and clear the
     engine memos so the test sees a cold lifecycle."""
     monkeypatch.setenv(spec.store_env, str(tmp_path))
-    media_index._HASH_STORE_CACHE.clear()
-    media_index._BAND_STORE_CACHE.clear()
-    media_index._INCR_INDEX_CACHE.clear()
-    media_index._INGEST_CACHE.clear()
+    clear_memo_caches()
 
 
 @pytest.mark.parametrize(
@@ -136,11 +134,11 @@ def test_video_incremental_probe_plans_without_exchange(
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_store_dirs_are_per_modality(planted_dir):
+def test_store_dirs_are_per_modality(planted_dir, store_address):
     """Three specs, three disjoint content-addressed artifact trees —
     a video constant bump must never serve stale audio bits."""
     dirs = {
-        media_index.store_table_dir(s, planted_dir)
+        store_address(media_index.hash_store, None, planted_dir, s)
         for s in (
             round12_ops.IMAGE_SPEC,
             media_lifecycle_ops.AUDIO_SPEC,
@@ -157,18 +155,14 @@ def test_streaming_ingest_cleans_scratch(spark, planted_dir):
     localCheckpoints (the stream_upsert_publish discipline), for the
     non-image instantiations too."""
     import glob
+    import tempfile
 
-    from programmers_data_spark.storeutil import store_base
-
-    media_index._INGEST_CACHE.clear()
+    clear_memo_caches()
     registry.QUERIES["stream_video_neardup_ingest"](
         spark, planted_dir
     ).count()
-    spec = media_lifecycle_ops.VIDEO_SPEC
-    base = store_base(
-        spec.ing_env, f"spark_graft_{spec.ing_prefix.rstrip('_')}"
-    )
-    assert glob.glob(os.path.join(base, spec.ing_prefix + "*")) == []
+    base = tempfile.gettempdir()
+    assert glob.glob(os.path.join(base, "videoingest_*")) == []
 
 
 def test_topk_planted_parity(spark, planted_dir):
@@ -270,15 +264,13 @@ def test_incremental_clusters_equal_full(spark, planted_dir):
     assert rows[23] == 0 and rows[24] == 1 and rows[25] == 2
 
 
-def test_image_spec_preserves_round12_identities(planted_dir):
-    """The engine refactor must not re-key the image tier's published
-    artifacts or scratch envs (round-12 stores carry over)."""
+def test_image_spec_preserves_round12_identities(planted_dir, store_address):
+    """The engine refactor must not rename the image tier's published
+    artifacts or its store env var."""
     spec = round12_ops.IMAGE_SPEC
     assert spec.store_env == "SPARK_GRAFT_IMG_STORE"
-    assert spec.ing_env == "SPARK_GRAFT_IMG_INGEST_STORE"
-    assert spec.ing_prefix == "imgingest_"
     assert spec.cat == "img"
-    d = media_index.store_table_dir(spec, planted_dir)
+    d = store_address(media_index.hash_store, None, planted_dir, spec)
     assert d.endswith("image_hashes")
     # the content-address embeds the LIVE constants via algo_fp
     assert f"{round12_ops.SCENE_MIN}" in spec.algo_fp
@@ -299,7 +291,6 @@ def test_pair_store_publishes_once_then_reads(
 
     spec = round12_ops.IMAGE_SPEC
     _isolate(monkeypatch, tmp_path, spec)
-    media_index._PAIR_STORE_CACHE.clear()
 
     first = media_index.pair_store(spark, planted_dir, spec)
     rows1 = [(r.media_a, r.media_b, r.ham_d)
@@ -308,7 +299,7 @@ def test_pair_store_publishes_once_then_reads(
     pair_dirs = _glob.glob(str(tmp_path / "*" / "image_pairs" / "gen-*"))
     assert len(pair_dirs) == 1, pair_dirs
 
-    media_index._PAIR_STORE_CACHE.clear()
+    clear_memo_caches()
     again = media_index.pair_store(spark, planted_dir, spec)
     rows2 = [(r.media_a, r.media_b, r.ham_d)
              for r in again.orderBy("media_a", "media_b").collect()]

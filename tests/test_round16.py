@@ -215,16 +215,15 @@ def test_embedding_ingest_cleans_scratch(spark):
     localCheckpoints — the engine discipline, for the vector
     instantiation too."""
     import glob
+    import tempfile
 
-    from programmers_data_spark.queries import round16_ops
-    from programmers_data_spark.embedding_index import EMB_INGEST_ENV
-    from programmers_data_spark.storeutil import store_base
+    from programmers_data_spark.memo import clear_memo_caches
 
-    round16_ops._EMB_INGEST_CACHE.clear()
+    clear_memo_caches()
     registry.QUERIES["stream_embedding_neardup_ingest"](
         spark, SF_DIR
     ).count()
-    base = store_base(EMB_INGEST_ENV, "spark_graft_embingest")
+    base = tempfile.gettempdir()
     assert glob.glob(os.path.join(base, "embingest_*")) == []
 
 
@@ -232,33 +231,25 @@ def test_pair_store_publishes_once_and_rereads(spark, tmp_path, monkeypatch):
     """Second read comes from the published artifact (no recompute):
     the store dir holds exactly one generation after two cold calls
     from fresh memo state."""
+    import glob
+
     from programmers_data_spark import embedding_index as EI
+    from programmers_data_spark.memo import clear_memo_caches
 
     monkeypatch.setenv(EI.EMB_STORE_ENV, str(tmp_path))
-    EI._SIG_STORE_CACHE.clear()
-    EI._EMB_PAIR_STORE_CACHE.clear()
-    EI._EMB_CLUSTER_STORE_CACHE.clear()
+    clear_memo_caches()
     first = {
         (r.vec_a, r.vec_b)
         for r in EI.pair_store(spark, SF_DIR).collect()
     }
-    EI._EMB_PAIR_STORE_CACHE.clear()
+    clear_memo_caches()
     second = {
         (r.vec_a, r.vec_b)
         for r in EI.pair_store(spark, SF_DIR).collect()
     }
     assert first == second and first
-    gens = [
-        d
-        for d in os.listdir(
-            os.path.join(
-                str(tmp_path),
-                os.listdir(str(tmp_path))[0],
-                "emb_pairs",
-            )
-        )
-        if d.startswith("gen-")
-    ]
+    [store_dir] = glob.glob(os.path.join(str(tmp_path), "*", "emb_pairs"))
+    gens = [d for d in os.listdir(store_dir) if d.startswith("gen-")]
     assert len(gens) == 1, gens
 
 
@@ -317,6 +308,7 @@ def test_embedding_stores_on_degenerate_fixture(
     import pandas as pd
 
     from programmers_data_spark import embedding_index as EI
+    from programmers_data_spark.memo import clear_memo_caches
     from programmers_data_spark.queries import round16_ops
 
     fx = tmp_path / "fx"
@@ -329,11 +321,7 @@ def test_embedding_stores_on_degenerate_fixture(
         }
     ).to_parquet(fx / "embeddings.parquet", index=False)
     monkeypatch.setenv(EI.EMB_STORE_ENV, str(tmp_path / "store"))
-    monkeypatch.setenv(EI.EMB_INGEST_ENV, str(tmp_path / "ing"))
-    EI._SIG_STORE_CACHE.clear()
-    EI._EMB_PAIR_STORE_CACHE.clear()
-    EI._EMB_CLUSTER_STORE_CACHE.clear()
-    round16_ops._EMB_INGEST_CACHE.clear()
+    clear_memo_caches()
     sfd = str(fx)
     assert EI.sig_store(spark, sfd).count() == 0
     assert EI.pair_store(spark, sfd).count() == 0
@@ -368,12 +356,13 @@ def test_replay_ingest_engine_toy_family(spark, tmp_path, monkeypatch):
     accumulation, the final distinct + ordering, and scratch cleanup."""
     import glob
     import itertools
+    import tempfile
 
     from pyspark.sql import functions as F
 
     from programmers_data_spark.ingest import replay_ingest
 
-    monkeypatch.setenv("SPARK_GRAFT_TOY_INGEST", str(tmp_path))
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     n = 24
     docs = spark.range(n).select(F.col("id").alias("doc_id"))
 
@@ -401,7 +390,6 @@ def test_replay_ingest_engine_toy_family(spark, tmp_path, monkeypatch):
         pair_cols=("doc_a", "doc_b"),
         band_cols=("band",),
         pair_schema="doc_a long, doc_b long, band long",
-        store_env="SPARK_GRAFT_TOY_INGEST",
         scratch_prefix="toyingest_",
         table_prefix="toyingest_bands_",
         n_slices=3,
@@ -420,11 +408,13 @@ def test_replay_ingest_engine_toy_family(spark, tmp_path, monkeypatch):
 def test_replay_ingest_empty_corpus(spark, tmp_path, monkeypatch):
     """An empty corpus short-circuits to the typed empty frame with
     no scratch tree."""
+    import tempfile
+
     from pyspark.sql import functions as F
 
     from programmers_data_spark.ingest import replay_ingest
 
-    monkeypatch.setenv("SPARK_GRAFT_TOY_INGEST2", str(tmp_path))
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     docs = spark.range(0).select(F.col("id").alias("doc_id"))
     out = replay_ingest(
         spark,
@@ -442,7 +432,6 @@ def test_replay_ingest_empty_corpus(spark, tmp_path, monkeypatch):
         pair_cols=("doc_a", "doc_b"),
         band_cols=("band",),
         pair_schema="doc_a long, doc_b long, band long",
-        store_env="SPARK_GRAFT_TOY_INGEST2",
         scratch_prefix="toyingest2_",
         table_prefix="toyingest2_bands_",
     )

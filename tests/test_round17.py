@@ -184,16 +184,18 @@ def test_text_cluster_store_publishes_once_and_rereads(
     re-resolved inline per run). Second read must come from the
     artifact — exactly one generation after two cold calls from
     fresh memo state — and reproduce the same assignments."""
+    import glob
+
+    from programmers_data_spark.memo import clear_memo_caches
     from programmers_data_spark.queries import dedup_ops, round15_ops
 
     monkeypatch.setenv(dedup_ops.PAIR_STORE_ENV, str(tmp_path))
-    dedup_ops._STORE_CACHE.clear()
-    round15_ops._TEXT_CLUSTER_STORE_CACHE.clear()
+    clear_memo_caches()
     first = {
         (r.doc_id, r.cluster_id)
         for r in round15_ops.text_cluster_store(spark, SF_DIR).collect()
     }
-    round15_ops._TEXT_CLUSTER_STORE_CACHE.clear()
+    clear_memo_caches()
     second = {
         (r.doc_id, r.cluster_id)
         for r in round15_ops.text_cluster_store(spark, SF_DIR).collect()
@@ -203,13 +205,9 @@ def test_text_cluster_store_publishes_once_and_rereads(
         _NEW_BATCH_RESIDUE,
     )
 
-    fp_dir = os.path.join(str(tmp_path), os.listdir(str(tmp_path))[0])
     leaf = f"text_clusters_r{_NEW_BATCH_RESIDUE}"
-    gens = [
-        d
-        for d in os.listdir(os.path.join(fp_dir, leaf))
-        if d.startswith("gen-")
-    ]
+    [store_dir] = glob.glob(os.path.join(str(tmp_path), "*", leaf))
+    gens = [d for d in os.listdir(store_dir) if d.startswith("gen-")]
     assert len(gens) == 1, gens
     # no arrival-batch doc may appear in the EXISTING-corpus store
     assert all(d % 10 != _NEW_BATCH_RESIDUE for d, _ in first)

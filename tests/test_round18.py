@@ -32,15 +32,12 @@ def fresh_deriv_store(monkeypatch, tmp_path):
     """Point the derived store at a fresh dir and drop its memo
     handles so each test sees a cold store (the bench-run layout)."""
     from programmers_data_spark import derived_store as ds
+    from programmers_data_spark.memo import clear_memo_caches
 
     monkeypatch.setenv(ds.DERIV_STORE_ENV, str(tmp_path / "deriv"))
-    for attr in dir(ds):
-        if attr.endswith("_CACHE"):
-            getattr(ds, attr).clear()
+    clear_memo_caches()
     yield ds
-    for attr in dir(ds):
-        if attr.endswith("_CACHE"):
-            getattr(ds, attr).clear()
+    clear_memo_caches()
 
 
 def test_store_consumers_scan_store_not_fixture(spark, fresh_deriv_store):
@@ -125,11 +122,12 @@ def test_store_build_is_charged_once_per_version(spark, fresh_deriv_store, tmp_p
     import glob
 
     from programmers_data_spark import derived_store as ds
+    from programmers_data_spark.memo import clear_memo_caches
 
     ds.token_store(spark, SF_DIR)
     gens = glob.glob(str(tmp_path / "deriv" / "*" / "tokens" / "gen-*"))
     assert len(gens) == 1, gens
-    ds._TOKENS_CACHE.clear()
+    clear_memo_caches()
     ds.token_store(spark, SF_DIR)
     gens2 = glob.glob(str(tmp_path / "deriv" / "*" / "tokens" / "gen-*"))
     assert gens2 == gens

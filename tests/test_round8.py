@@ -206,14 +206,16 @@ def test_verified_pair_store_publishes_then_serves(
     clear_memo_caches()
 
 
-def test_pair_store_keys_on_fixture_identity(spark, sf_smoke, tmp_path):
+def test_pair_store_keys_on_fixture_identity(
+    spark, sf_smoke, tmp_path, store_address
+):
     """The artifact is content-addressed: a different fixture dir (or
     a regenerated documents.parquet) maps to a different store table,
     so stale pairs can never serve a new corpus."""
-    from programmers_data_spark.queries.dedup_ops import _pair_store_table
+    from programmers_data_spark.queries.dedup_ops import verified_pair_store
 
-    a = _pair_store_table(sf_smoke)
-    b = _pair_store_table(str(tmp_path))
+    a = store_address(verified_pair_store, spark, sf_smoke)
+    b = store_address(verified_pair_store, spark, str(tmp_path))
     assert a != b
 
 

@@ -102,17 +102,19 @@ def test_publish_heartbeats_claim_while_write_in_flight(
     )
 
 
-def test_pair_store_fingerprint_tracks_threshold(monkeypatch, tmp_path):
-    """_pair_store_table must derive its fingerprint from the LIVE
+def test_pair_store_fingerprint_tracks_threshold(
+    monkeypatch, tmp_path, sf_smoke, store_address
+):
+    """The pair store's address must derive from the LIVE
     JACCARD_THRESHOLD constant: changing the constant must change the
     store path (a stale hand-written literal would keep serving the
     old published pairs)."""
     import programmers_data_spark.queries.dedup_ops as dd
 
     monkeypatch.setenv(dd.PAIR_STORE_ENV, str(tmp_path))
-    p1 = dd._pair_store_table("/root/testdata/sf0.001")
+    p1 = store_address(dd.verified_pair_store, None, sf_smoke)
     monkeypatch.setattr(dd, "JACCARD_THRESHOLD", 0.7)
-    p2 = dd._pair_store_table("/root/testdata/sf0.001")
+    p2 = store_address(dd.verified_pair_store, None, sf_smoke)
     assert p1 != p2
 
 
@@ -296,10 +298,11 @@ def test_jsonl_roundtrip_detects_row_loss(spark, tmp_path, monkeypatch):
     from a fresh roundtrip of the intact corpus."""
     import glob
     import gzip
+    import tempfile
 
     import programmers_data_spark.queries.interchange_ops as io9
 
-    monkeypatch.setenv(io9.JSONL_STORE_ENV, str(tmp_path / "a"))
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     sf = "/root/testdata/sf0.001"
     io9._JSONL_CACHE.clear()
     intact = {
@@ -309,7 +312,7 @@ def test_jsonl_roundtrip_detects_row_loss(spark, tmp_path, monkeypatch):
 
     # corrupt: rewrite one shard file minus its first line, then force
     # a fresh roundtrip read over the SAME written tree
-    store = glob.glob(str(tmp_path / "a" / "jsonl_rt_*" / "docs"))[0]
+    store = glob.glob(str(tmp_path / "jsonl_rt_*" / "docs"))[0]
     victim = sorted(glob.glob(f"{store}/_shard=*/part-*"))[0]
     with gzip.open(victim, "rt", encoding="utf-8") as f:
         lines = f.read().splitlines()
@@ -966,10 +969,12 @@ def test_orc_roundtrip_tree_prunes_partitions(spark, sf_smoke, tmp_path,
     """The ORC tree the roundtrip writes must behave like a real lake
     layout: a predicate on the partition column reaches the scan as a
     PartitionFilter (directory pruning), not a data filter."""
+    import tempfile
+
     import programmers_data_spark.queries.interchange_ops as ic
     from programmers_data_spark import registry
 
-    monkeypatch.setenv(ic.ORC_STORE_ENV, str(tmp_path))
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     ic._ORC_CACHE.clear()
     registry.QUERIES["orc_partitioned_roundtrip"](spark, sf_smoke).collect()
 
